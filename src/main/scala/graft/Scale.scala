@@ -79,26 +79,29 @@ object Scale {
     * other diagnostic listeners.
     */
   private final class StageSkewReporter(sc: org.apache.spark.SparkContext) {
+    // Keyed by (stage, attempt): a retried stage's tasks must not mix into
+    // (or be drained with) the earlier attempt's sample.
     private val durs = new java.util.concurrent.ConcurrentHashMap[
-      Int, java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]]()
+      (Int, Int), java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]]()
     private val listener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(
           e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
         val m = e.taskMetrics
         if (e.taskInfo != null && m != null)
-          durs.computeIfAbsent(e.stageId,
+          durs.computeIfAbsent((e.stageId, e.stageAttemptId),
             _ => new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]())
             .add((e.taskInfo.duration, m.shuffleReadMetrics.totalBytesRead))
       }
       override def onStageCompleted(
           e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val q = durs.remove(e.stageInfo.stageId)
+        val q = durs.remove((e.stageInfo.stageId, e.stageInfo.attemptNumber()))
         if (q != null && q.size >= 8) {
           import scala.jdk.CollectionConverters._
           val ds = q.asScala.map(_._1).toArray.sorted
           val med = math.max(ds(ds.length / 2), 1L)
           val maxSr = q.asScala.map(_._2).max
           System.err.println(f"[stage-skew] stage=${e.stageInfo.stageId}%-5d " +
+            f"attempt=${e.stageInfo.attemptNumber()}%-2d " +
             f"tasks=${ds.length}%-4d med=${med / 1000.0}%6.2fs " +
             f"max=${ds.last / 1000.0}%6.2fs ratio=${ds.last.toDouble / med}%5.2f " +
             f"maxShufR=${maxSr / 1048576.0}%8.1fMB  " +

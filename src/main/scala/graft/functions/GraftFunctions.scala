@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -328,6 +329,67 @@ case class PqAdcScore(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
+/** The routing of one IVF-PQ query batch, flattened for the scan: list `l`
+  * is probed by the queries `qidx(start(l) until start(l + 1))`, whose
+  * q·centroid(l) terms sit at the same positions of `qcdot`; `tables` holds
+  * every query's ADC table ([[Kernels.pqAdcTableF]], `tableLen` = m·ks
+  * doubles each) back to back, indexed by query.
+  */
+final class PqProbes(val start: Array[Int], val qidx: Array[Int],
+    val qcdot: Array[Double], val tables: Array[Double], val tableLen: Int)
+    extends Serializable {
+  override def toString: String =
+    s"PqProbes(lists=${start.length - 1}, probes=${qidx.length})"
+}
+
+/** pq_probe_scores(list_id, codes) → array<struct<qidx: int, approx:
+  * double>>: every (batch query, ADC score) pair a corpus row produces
+  * ([[Kernels.pqProbeScores]]). The batch's routing is a PLAN-TIME
+  * constant ([[PqProbes]], shipped once per task via the codegen reference
+  * table like [[PqAdcTable]]'s codebooks), so IVF-PQ candidate scoring is
+  * one scan-local static call — no join against a probe table, no
+  * broadcast.
+  */
+case class PqProbeScores(left: Expression, right: Expression, probes: PqProbes)
+    extends BinaryExpression {
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("qidx", IntegerType, nullable = false),
+    StructField("approx", DoubleType, nullable = false))), containsNull = false)
+  override def prettyName: String = "graft_pq_probe_scores"
+  override protected def nullSafeEval(listId: Any, codes: Any): Any =
+    Kernels.pqProbeScores(listId.asInstanceOf[Int],
+      codes.asInstanceOf[Array[Byte]], probes)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("probes", probes, classOf[PqProbes].getName)
+    defineCodeGen(ctx, ev,
+      (l, c) => s"graft.functions.Kernels.pqProbeScores($l, $c, $ref)")
+  }
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
+    copy(left = l, right = r)
+}
+
+object PqProbeScores {
+  /** Registry builder support: the routing arrives as foldable literals —
+    * list offsets and query indexes (array<int>), q·centroid terms
+    * (array<double>) and one ADC table per query (array<array<double>>).
+    */
+  def fromLiterals(listId: Expression, codes: Expression, startLit: Expression,
+      qidxLit: Expression, qcdotLit: Expression,
+      tablesLit: Expression): PqProbeScores = {
+    def ints(e: Expression, what: String): Array[Int] = {
+      require(e.foldable, s"graft_pq_probe_scores: $what must be a literal")
+      e.eval().asInstanceOf[ArrayData].toIntArray()
+    }
+    require(qcdotLit.foldable, "graft_pq_probe_scores: qcdot must be a literal")
+    val qcdot = qcdotLit.eval().asInstanceOf[ArrayData].toDoubleArray()
+    val tables = PqTables.flat2(tablesLit, "graft_pq_probe_scores: tables")
+    val nq = tablesLit.eval().asInstanceOf[ArrayData].numElements()
+    PqProbeScores(listId, codes, new PqProbes(ints(startLit, "start"),
+      ints(qidxLit, "qidx"), qcdot, tables,
+      if (nq == 0) 0 else tables.length / nq))
+  }
+}
+
 /** nfc_normalize(text) → string: Unicode canonical composition
   * ([[Kernels.nfc]]) — the pre-dedup normalization pass.
   */
@@ -516,62 +578,53 @@ object GraftFunctions {
         org.apache.spark.sql.functions.array(e), body),
       1)
 
+  /** The SQL name and builder of every custom expression. */
+  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    "graft_cosine" -> (es => CosineSimilarity(es(0), es(1))),
+    "graft_byte_distance" -> (es => ByteDistance(es(0), es(1))),
+    "graft_simhash64" -> (es => SimHash64(es.head)),
+    "graft_fingerprint" -> (es => RollingFingerprint(es.head, 12)),
+    "graft_sign_projection" -> (es => SignProjection(es.head, 64)),
+    "graft_top_ngram_frac" -> (es => TopNgramCharFraction(es(0), 2)),
+    "graft_dup_ngram_frac" -> (es => DupNgramCharFraction(es(0), 5)),
+    "graft_deflate_ratio" -> (es => DeflateRatio(es.head)),
+    // Aggregate builders return the bare AggregateFunction; the analyzer
+    // wraps it in an AggregateExpression at resolution.
+    "graft_collect_min_k" ->
+      (es => CollectMinK(es(0), CollectMinK.expressionToK(es(1)))),
+    "graft_vec_mean" -> (es => VecMean(es.head)),
+    "graft_nearest_centroid" -> (es => NearestCentroid.fromLiteral(es(0), es(1))),
+    "graft_pq_encode" -> (es => PqEncode.fromLiterals(es(0), es(1), es(2), es(3))),
+    "graft_pq_adc_table" -> (es => PqAdcTable.fromLiteral(es(0), es(1))),
+    "graft_pq_adc_score" -> (es => PqAdcScore(es(0), es(1))),
+    "graft_bloom_might_contain" ->
+      (es => BloomMightContain.fromLiteral(es(0), es(1))),
+    "graft_remove_spans" ->
+      (es => RemoveSpans(es(0), es(1), CollectMinK.expressionToK(es(2)))),
+    // Same sweep over a doc's LINES (n=1, rejoin with newline) — the
+    // line-dedup rewrite.
+    "graft_remove_lines" -> (es => RemoveSpans(es(0), es(1), 1, '\n')),
+    "graft_dedup_lines" -> (es => DedupLines(es.head)),
+    "graft_bpe_tokens" -> (es => BpeTokens.fromLiteral(es(0), es(1))),
+    "graft_nfc" -> (es => NfcNormalize(es.head)),
+    "graft_bpe_token_ids" -> (es => BpeTokenIds.fromLiterals(es(0), es(1), es(2))),
+    "graft_sq8_encode" -> (es => Sq8Encode(es.head)),
+    "graft_sq8_dot" -> (es => Sq8Dot(es(0), es(1))),
+    "graft_pq_probe_scores" ->
+      (es => PqProbeScores.fromLiterals(es(0), es(1), es(2), es(3), es(4), es(5))),
+  )
+
   /** Register the functions in a session's registry so both `spark.sql` and
-    * `call_function` can use them. Idempotent per session.
+    * `call_function` can use them. Idempotent per session: a name the
+    * registry already holds is left alone, so a repeat call replaces (and
+    * logs) nothing.
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_cosine",
-      es => CosineSimilarity(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_byte_distance",
-      es => ByteDistance(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash64",
-      es => SimHash64(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_fingerprint",
-      es => RollingFingerprint(es.head, 12), "built-in")
-    reg.createOrReplaceTempFunction("graft_sign_projection",
-      es => SignProjection(es.head, 64), "built-in")
-    reg.createOrReplaceTempFunction("graft_top_ngram_frac",
-      es => TopNgramCharFraction(es(0), 2), "built-in")
-    reg.createOrReplaceTempFunction("graft_dup_ngram_frac",
-      es => DupNgramCharFraction(es(0), 5), "built-in")
-    reg.createOrReplaceTempFunction("graft_deflate_ratio",
-      es => DeflateRatio(es.head), "built-in")
-    // Aggregate builders return the bare AggregateFunction; the analyzer
-    // wraps it in an AggregateExpression at resolution.
-    reg.createOrReplaceTempFunction("graft_collect_min_k",
-      es => CollectMinK(es(0), CollectMinK.expressionToK(es(1))), "built-in")
-    reg.createOrReplaceTempFunction("graft_vec_mean",
-      es => VecMean(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_nearest_centroid",
-      es => NearestCentroid.fromLiteral(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_encode",
-      es => PqEncode.fromLiterals(es(0), es(1), es(2), es(3)), "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_adc_table",
-      es => PqAdcTable.fromLiteral(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_adc_score",
-      es => PqAdcScore(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_bloom_might_contain",
-      es => BloomMightContain.fromLiteral(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_remove_spans",
-      es => RemoveSpans(es(0), es(1), CollectMinK.expressionToK(es(2))),
-      "built-in")
-    // Same sweep over a doc's LINES (n=1, rejoin with newline) — the
-    // line-dedup rewrite.
-    reg.createOrReplaceTempFunction("graft_remove_lines",
-      es => RemoveSpans(es(0), es(1), 1, '\n'), "built-in")
-    reg.createOrReplaceTempFunction("graft_dedup_lines",
-      es => DedupLines(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_bpe_tokens",
-      es => BpeTokens.fromLiteral(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_nfc",
-      es => NfcNormalize(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_bpe_token_ids",
-      es => BpeTokenIds.fromLiterals(es(0), es(1), es(2)), "built-in")
-    reg.createOrReplaceTempFunction("graft_sq8_encode",
-      es => Sq8Encode(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_sq8_dot",
-      es => Sq8Dot(es(0), es(1)), "built-in")
+    builders.foreach { case (name, build) =>
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 
   def cosineSim(a: Column, b: Column): Column = call_function("graft_cosine", a, b)
@@ -656,6 +709,20 @@ object GraftFunctions {
   /** Residual ADC score: m table lookups per candidate ([[PqAdcScore]]). */
   def pqAdcScore(codes: Column, table: Column): Column =
     call_function("graft_pq_adc_score", codes, table)
+
+  /** IVF-PQ candidate scores for one routed query batch ([[PqProbeScores]]):
+    * list `l` is probed by queries `qidx(start(l) until start(l + 1))` with
+    * q·centroid terms `qcdot` at the same positions; `tables(q)` is query
+    * q's ADC table. All four are plan constants.
+    */
+  def pqProbeScores(listId: Column, codes: Column, start: Array[Int],
+      qidx: Array[Int], qcdot: Array[Double],
+      tables: Array[Array[Double]]): Column =
+    call_function("graft_pq_probe_scores", listId, codes,
+      org.apache.spark.sql.functions.typedlit(start.toSeq),
+      org.apache.spark.sql.functions.typedlit(qidx.toSeq),
+      org.apache.spark.sql.functions.typedlit(qcdot.toSeq),
+      org.apache.spark.sql.functions.typedlit(tables.map(_.toSeq).toSeq))
 
   /** Scan-local Bloom membership probe ([[BloomMightContain]]); the filter
     * ships through the plan serialized once, not per row.

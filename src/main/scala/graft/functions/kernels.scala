@@ -243,9 +243,9 @@ object Kernels {
     * `aggregate` lambda formulation of the same normalization blocks
     * whole-stage codegen for the entire scan stage) — then assignment is
     * argmax(2·(v·c)/‖v‖ − ||c||²) = argmin ||v/‖v‖ − c||², ties to the
-    * lowest list id — the same ranking [[graft.similarity.Knn.searchIvf]]'s
-    * probe phase uses, so corpus assignment and query probing can never
-    * disagree on a boundary point. Zero vectors assign to the
+    * lowest list id — the same ranking IVF and IVF-PQ search route
+    * queries by on the driver, so corpus assignment and query probing can
+    * never disagree on a boundary point. Zero vectors assign to the
     * smallest-norm centroid (any list is equally wrong for a
     * direction-free point; the choice is deterministic). Returns -1 when
     * there are no centroids. Double-array reader; [[nearestCentroidF]] is
@@ -421,9 +421,6 @@ object Kernels {
   def pqAdcTableD(vec: ArrayData, books: Array[Double], m: Int, ks: Int): ArrayData =
     pqAdcTableImpl(i => vec.getDouble(i), vec.numElements(), books, m, ks)
 
-  /** Residual part of the ADC score: m table lookups, one per code byte.
-    * `table` is a query's [[pqAdcTableF]] output (length m·ks).
-    */
   private val wsPattern = java.util.regex.Pattern.compile("\\s+")
 
   /** Unicode NFC normalization — canonical composition, so "e" + combining
@@ -607,6 +604,9 @@ object Kernels {
     acc / (127.0 * 127.0)
   }
 
+  /** Residual part of the ADC score: m table lookups, one per code byte.
+    * `table` is a query's [[pqAdcTableF]] output (length m·ks).
+    */
   def pqAdcScore(codes: Array[Byte], table: ArrayData): Double = {
     val m = codes.length
     if (m == 0) return 0.0
@@ -618,6 +618,37 @@ object Kernels {
       sub += 1
     }
     s
+  }
+
+  /** IVF-PQ candidate scoring for a whole routed query batch: one
+    * (query index, approx) row per batch query that probes `listId`, with
+    * approx = q·centroid(listId) + the [[pqAdcScore]] sum over that query's
+    * table — the same additions in the same order, so the score is
+    * bit-identical to scoring the pair through [[pqAdcScore]]. Lists no
+    * query probes yield an empty array.
+    */
+  def pqProbeScores(listId: Int, codes: Array[Byte], p: PqProbes): ArrayData = {
+    if (listId < 0 || listId + 1 >= p.start.length)
+      return new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
+    val from = p.start(listId)
+    val to = p.start(listId + 1)
+    val m = codes.length
+    val ks = if (m == 0) 0 else p.tableLen / m
+    val out = new Array[Any](to - from)
+    var i = from
+    while (i < to) {
+      val off = p.qidx(i) * p.tableLen
+      var s = 0.0
+      var sub = 0
+      while (sub < m) {
+        s += p.tables(off + sub * ks + (codes(sub) & 0xff))
+        sub += 1
+      }
+      out(i - from) = new org.apache.spark.sql.catalyst.expressions
+        .GenericInternalRow(Array[Any](p.qidx(i), p.qcdot(i) + s))
+      i += 1
+    }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
   /** Cosine similarity of two float vectors (0.0 when either norm is 0). */

@@ -1,10 +1,15 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil, TypeUtils}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-import graft.functions.GraftFunctions
+import graft.functions.{GraftFunctions, Kernels}
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -143,7 +148,7 @@ object Knn {
     * broadcast; only (query_id, neighbor_id, approx) rides the top-refine
     * exchange — codes and vectors never shuffle; the refine join
     * broadcasts the (queries × refine)-bounded candidate list against the
-    * raw corpus, exactly like [[searchIvfPq]]'s refine stage.
+    * raw corpus.
     */
   def sq8TopK(queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int, refine: Int = 32): DataFrame = {
@@ -174,8 +179,9 @@ object Knn {
     topK(scored, k)
   }
 
-  /** A built IVF index: `centroids` (list_id, centroid, cnorm2 — tiny,
-    * broadcastable) and the corpus `assigned` to inverted lists
+  /** A built IVF index: the coarse `centroids`, held on the driver (list
+    * id = array index; nlist·dim doubles, which every search routes
+    * against) and the corpus `assigned` to inverted lists
     * (neighbor_id, neighbor_vec, list_id). Build ONCE per corpus version
     * ([[buildIvf]]) and search many times ([[searchIvf]]) — at 100 TB the
     * assignment scan dwarfs any single query batch, so a long-lived
@@ -183,16 +189,18 @@ object Knn {
     * bucketed by list_id, which makes every later candidate join
     * partition-pruned / shuffle-free) and reattaches it here.
     */
-  final case class IvfIndex(centroids: DataFrame, assigned: DataFrame, nlist: Int)
+  final case class IvfIndex(centroids: Array[Array[Double]], assigned: DataFrame,
+      nlist: Int)
 
   /** IVF-style ANN (the FAISS IVF-Flat shape on DataFrames): a seeded
     * KMeans coarse quantizer over L2-normalized vectors partitions the
     * corpus into `nlist` inverted lists; each query probes its `nprobe`
     * nearest centroids and exact cosine re-ranks only those lists.
     *
-    * Scale shape: corpus assignment is one scan-local ML transform; the
-    * centroid table is tiny and broadcast; the candidate join is an
-    * equi-join on list id, so the corpus never shuffles by query. Recall
+    * Scale shape: corpus assignment is one scan-local codegen'd transform;
+    * queries route against the driver-side centroid table; the candidate
+    * join is an equi-join on list id against the broadcast probe list, so
+    * the corpus never shuffles by query. Recall
     * grows with nprobe (nprobe = nlist ⇒ exact brute force). One-shot
     * convenience for build-then-search — reuse [[buildIvf]] +
     * [[searchIvf]] when more than one query batch hits the same corpus.
@@ -210,9 +218,7 @@ object Knn {
     */
   def buildIvf(corpus: DataFrame, idCol: String, vecCol: String,
       nlist: Int = 16, seed: Long = 42L, maxIter: Int = 4): IvfIndex = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    GraftFunctions.register(spark)
+    GraftFunctions.register(corpus.sparkSession)
 
     val base =
       corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("neighbor_vec"))
@@ -237,22 +243,19 @@ object Knn {
     // for derived inputs is a full scan, not a metadata read).
     val sample = collectNormalizedSample(base, nlist * 256, seed)
     val centroids = lloyd(sample, math.min(nlist, sample.length), maxIter, seed)
-    val cents = centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq, c.map(x => x * x).sum) }.toSeq
-      .toDF("list_id", "centroid", "cnorm2")
     // Assignment is a scan-local codegen'd argmax over the plan-constant
     // centroid table ([[GraftFunctions.nearestCentroid]], which
     // normalizes the raw vector inside the kernel — a lambda-built nvec
     // column here measurably knocked the whole scan stage out of
     // whole-stage codegen) — the corpus never shuffles and no ML pipeline
     // sits in the hot path. The scoring (and its lowest-list tie-break)
-    // is shared with [[searchIvf]]'s probe ranking, so a boundary vector
-    // is always probed in the list it was assigned to.
+    // is the one [[rankLists]] routes queries by, so a boundary vector is
+    // always probed in the list it was assigned to.
     val assigned = base
       .withColumn("list_id",
         GraftFunctions.nearestCentroid(col("neighbor_vec"), centroids))
       .select("neighbor_id", "neighbor_vec", "list_id")
-    IvfIndex(cents, assigned, nlist)
+    IvfIndex(centroids, assigned, nlist)
   }
 
   /** Collect the bounded deterministic training prefix (see the [[buildIvf]]
@@ -337,32 +340,30 @@ object Knn {
     cents
   }
 
-  /** Probe a built index: each query ranks the broadcast centroid table,
-    * takes its `nprobe` nearest lists, and exact cosine re-ranks only
-    * those lists' members — the per-query-batch half of IVF search, cheap
-    * relative to [[buildIvf]] and repeatable against one index.
+  /** Probe a built index: the query batch is collected and routed on the
+    * driver ([[rankLists]], each query's `nprobe` nearest lists), and exact
+    * cosine re-ranks only those lists' members — the per-query-batch half
+    * of IVF search, cheap relative to [[buildIvf]] and repeatable against
+    * one index. Collecting the batch is the only eager step (no job for a
+    * local batch); the candidate join is returned lazy, statically
+    * filtered to the probed lists.
     */
   def searchIvf(index: IvfIndex, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int = 4): DataFrame = {
-    def dot(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
-    // Probe ranking must mirror the quantizer's metric: for unit-norm q,
-    // argmin ||q - c||² == argmax (2·q·c - ||c||²). Ranking by raw dot
-    // would disagree with KMeans assignment whenever centroid norms differ,
-    // and an identical query could miss its own vector's list.
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("cdist").desc, col("list_id"))
-    val probes = withNormed(
-        queries.select(col(idCol).as("query_id"), col(vecCol).as("query_vec")),
-        "query_vec")
-      .withColumnRenamed("nvec", "qn")
-      .crossJoin(broadcast(index.centroids))
-      .withColumn("cdist", dot(col("qn"), col("centroid")) * 2 - col("cnorm2"))
-      .withColumn("prk", row_number().over(probeW))
-      .filter(col("prk") <= nprobe)
-      .select("query_id", "query_vec", "list_id")
-
-    val scored = index.assigned.join(broadcast(probes), Seq("list_id"))
+    val spark = queries.sparkSession
+    GraftFunctions.register(spark)
+    val batch = collectBatch(queries, idCol, vecCol)
+    val probes = batch.normed.indices.flatMap { q =>
+      rankLists(batch.normed(q), index.centroids, nprobe)
+        .map { case (list, _) => Row(batch.ids(q), batch.vecs(q), list) }
+    }
+    val probeDf = spark.createDataFrame(probes.asJava, StructType(Seq(
+      batch.idField.copy(name = "query_id"),
+      batch.vecField.copy(name = "query_vec"),
+      StructField("list_id", IntegerType, nullable = false))))
+    val scored = index.assigned
+      .filter(col("list_id").isin(probes.map(_.getInt(2)).distinct: _*))
+      .join(broadcast(probeDf), Seq("list_id"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .withColumn("cosine",
         GraftFunctions.cosineSim(col("query_vec"), col("neighbor_vec")))
@@ -370,16 +371,21 @@ object Knn {
   }
 
   /** A built IVF-PQ index (the FAISS IVFPQ shape): the coarse `centroids`
-    * table as in [[IvfIndex]], plus per-subspace residual `codebooks`
-    * (m × ks × dim/m, a driver-side constant) and the corpus `encoded` as
+    * as in [[IvfIndex]] and the per-subspace residual `codebooks`
+    * (m × ks × dim/m), both held on the driver, and the corpus `encoded` as
     * (neighbor_id, list_id, codes) — m CODE BYTES per row instead of the
     * raw vector. That compression is the point at 100 TB: a 64-dim float
     * corpus's index shrinks 256 B → 8 B per row (+id), so the searchable
-    * index stays RAM/SSD-resident while raw vectors remain cold storage
-    * that only the final refine join touches, for candidate sets ~refine
-    * per query.
+    * index stays RAM/SSD-resident while raw vectors remain cold storage.
+    *
+    * Scale shape: the driver-side half is O(nlist·dim + m·ks·dim/m)
+    * doubles, independent of corpus size — everything a search needs to
+    * route a batch and build its ADC tables without a Spark job. The
+    * corpus-sized half is only ever scanned: `encoded` restricted to the
+    * probed lists (a static partition filter once persisted by
+    * [[saveIvfPq]]), and the raw vectors for at most queries × refine ids.
     */
-  final case class IvfPqIndex(centroids: DataFrame,
+  final case class IvfPqIndex(centroids: Array[Array[Double]],
       codebooks: Array[Array[Array[Double]]], encoded: DataFrame,
       nlist: Int, m: Int)
 
@@ -409,9 +415,7 @@ object Knn {
       ks: Int = 256): IvfPqIndex = {
     require(m > 0, s"m must be positive, got $m")
     require(ks > 0 && ks <= 256, s"ks must be in 1..256, got $ks")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    GraftFunctions.register(spark)
+    GraftFunctions.register(corpus.sparkSession)
 
     val base =
       corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("neighbor_vec"))
@@ -439,9 +443,6 @@ object Knn {
       val slices = residuals.map(_.slice(sub * dsub, (sub + 1) * dsub))
       lloyd(slices, math.min(ks, slices.length), maxIter, seed + 1 + sub)
     }
-    val cents = centroids.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq, c.map(x => x * x).sum) }.toSeq
-      .toDF("list_id", "centroid", "cnorm2")
     val encoded = base
       .withColumn("list_id",
         GraftFunctions.nearestCentroid(col("neighbor_vec"), centroids))
@@ -449,18 +450,22 @@ object Knn {
         GraftFunctions.pqEncode(col("neighbor_vec"), col("list_id"),
           centroids, codebooks))
       .select("neighbor_id", "list_id", "codes")
-    IvfPqIndex(cents, codebooks, encoded, nlist, m)
+    IvfPqIndex(centroids, codebooks, encoded, nlist, m)
   }
 
-  /** Driver-side twin of the [[graft.functions.Kernels.nearestCentroid]]
-    * scoring (points already normalized): argmax(2·p·c − ‖c‖²), ties to
-    * the lowest id, -1 when there are no centroids.
+  /** The coarse-quantizer ranking every IVF path routes by, on the
+    * driver: for a normalized point p, list c scores 2·p·c − ‖c‖², i.e.
+    * argmin ‖p − c‖² on the unit sphere (ranking by the raw dot would
+    * disagree with the assignment whenever centroid norms differ, and an
+    * identical query could miss its own vector's list). Returns the `n`
+    * best lists as (list id, p·c), best first, ties to the lowest list id
+    * — the rule of [[graft.functions.Kernels.nearestCentroid]], so a
+    * boundary vector is always probed in the list it was assigned to.
     */
-  private def nearestDriver(p: Array[Double],
-      cents: Array[Array[Double]]): Int = {
-    if (cents.isEmpty) return -1
-    var best = -1
-    var bestScore = Double.NegativeInfinity
+  private def rankLists(p: Array[Double], cents: Array[Array[Double]],
+      n: Int): Array[(Int, Double)] = {
+    val dots = new Array[Double](cents.length)
+    val scores = new Array[Double](cents.length)
     var c = 0
     while (c < cents.length) {
       var dot = 0.0; var n2 = 0.0; var i = 0
@@ -469,100 +474,225 @@ object Knn {
         if (i < p.length) dot += p(i) * cc(i)
         n2 += cc(i) * cc(i); i += 1
       }
-      val score = 2.0 * dot - n2
-      if (score > bestScore) { bestScore = score; best = c }
+      dots(c) = dot
+      scores(c) = 2.0 * dot - n2
       c += 1
     }
-    best
+    Array.range(0, cents.length)
+      .sorted(Ordering.fromLessThan[Int] { (a, b) =>
+        val cmp = SQLOrderingUtil.compareDoubles(scores(a), scores(b))
+        if (cmp != 0) cmp > 0 else a < b
+      })
+      .take(math.max(n, 0)).map(c => (c, dots(c)))
   }
 
-  /** Probe a built IVF-PQ index: queries rank the broadcast centroid table
-    * exactly as [[searchIvf]] does, then candidates in the probed lists are
-    * scored ASYMMETRICALLY — approx cosine = q·centroid + Σ ADC table
-    * lookups, m array reads per candidate, never a dim-length dot — and the
-    * top `refine` per query are re-ranked with exact cosine against the raw
-    * corpus vectors.
+  /** Nearest list of a normalized point, -1 when there are no centroids. */
+  private def nearestDriver(p: Array[Double], cents: Array[Array[Double]]): Int =
+    rankLists(p, cents, 1).headOption.fold(-1)(_._1)
+
+  /** A query batch collected to the driver: the raw id and vector values,
+    * the vectors as kernel input (`data`) and L2-normalized (`normed`).
+    * Normalization divides each element by the norm (not a multiply by
+    * its inverse), the arithmetic of the SQL probe-ranking formulation the
+    * specs compare against, so routing reproduces it to the bit. Queries
+    * with a null id or vector can match nothing and are dropped.
+    */
+  private final case class QueryBatch(idField: StructField,
+      vecField: StructField, isFloat: Boolean, ids: Array[Any],
+      vecs: Array[Any], data: Array[ArrayData], normed: Array[Array[Double]])
+
+  private def collectBatch(queries: DataFrame, idCol: String,
+      vecCol: String): QueryBatch = {
+    val q = queries.select(col(idCol), col(vecCol))
+    val Array(idField, vecField) = q.schema.fields
+    val isFloat = isFloatVector(vecField)
+    val rows = q.collect().filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+    val data = rows.map(r => arrayData(r.getSeq[Any](1), isFloat))
+    val normed = data.map { v =>
+      val x = Array.tabulate(v.numElements())(i =>
+        if (isFloat) v.getFloat(i).toDouble else v.getDouble(i))
+      var nrm2 = 0.0; var i = 0
+      while (i < x.length) { nrm2 += x(i) * x(i); i += 1 }
+      val l2 = math.sqrt(nrm2)
+      x.map(_ / l2)
+    }
+    QueryBatch(idField, vecField, isFloat, rows.map(_.get(0)),
+      rows.map(_.get(1)), data, normed)
+  }
+
+  private def isFloatVector(f: StructField): Boolean = f.dataType match {
+    case ArrayType(FloatType, _)  => true
+    case ArrayType(DoubleType, _) => false
+    case t => throw new IllegalArgumentException(
+      s"${f.name}: expected array<float> or array<double>, got ${t.sql}")
+  }
+
+  private def arrayData(v: scala.collection.Seq[Any], isFloat: Boolean): ArrayData =
+    if (isFloat) ArrayData.toArrayData(v.map(_.asInstanceOf[Float]).toArray)
+    else ArrayData.toArrayData(v.map(_.asInstanceOf[Double]).toArray)
+
+  /** Search a built IVF-PQ index. Each query picks its `nprobe` lists on
+    * the driver ([[rankLists]]) and gets its ADC table there; candidates in
+    * the probed lists are scored ASYMMETRICALLY — approx cosine =
+    * q·centroid + Σ ADC table lookups, m array reads per candidate, never
+    * a dim-length dot — and the top `refine` per query (approx desc, then
+    * id) are re-ranked with exact cosine against the raw corpus vectors,
+    * returning the top k per query (cosine desc, then id) as
+    * (query_id, neighbor_id, cosine, rank).
     *
-    * Scale shape: the per-query ADC table (m·ks doubles) is computed once
-    * on the broadcast query side; the candidate scoring stage carries only
-    * (query_id, neighbor_id, approx) into the top-refine exchange — code
-    * bytes stay scan-local, vectors never shuffle. The refine join
-    * broadcasts the (queries × refine)-bounded candidate list against the
-    * raw corpus, so the expensive exact cosine touches `refine` rows per
-    * query, not a list's worth.
+    * The search runs when called and returns a local DataFrame: at most
+    * three Spark jobs per batch (none to collect a local query batch, two
+    * for the candidate stage, one for the refine scan).
+    *
+    * Scale shape: the query batch and at most queries × refine candidate
+    * rows are collected to the driver, so a batch must be broadcast-sized
+    * (each query's m·ks-double ADC table rides the plan). The candidate
+    * stage is one scan of `encoded` with a static `list_id IN (probed
+    * lists)` filter — partition pruning on a persisted index — scored by
+    * one codegen'd expression that holds the batch's routing as a plan
+    * constant ([[GraftFunctions.pqProbeScores]]); only (query, id, approx)
+    * rides its single exchange, the top-refine window. The refine scan
+    * reads the raw corpus for the candidate ids only and scores them with
+    * the kernel `graft_cosine` calls, so scores are bit-identical to the
+    * SQL surface.
     */
   def searchIvfPq(index: IvfPqIndex, queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int, nprobe: Int = 4,
       refine: Int = 32): DataFrame = {
-    val spark = queries.sparkSession
-    GraftFunctions.register(spark)
-    def dot(a: Column, b: Column): Column =
-      aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
-    // Probe ranking mirrors the quantizer metric (see searchIvf); qcdot is
-    // the q·centroid part of the ADC score, shared with the ranking.
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("cdist").desc, col("list_id"))
-    val probes = withNormed(
-        queries.select(col(idCol).as("query_id"), col(vecCol).as("query_vec")),
-        "query_vec")
-      .withColumnRenamed("nvec", "qn")
-      .withColumn("qtable",
-        GraftFunctions.pqAdcTable(col("query_vec"), index.codebooks))
-      .crossJoin(broadcast(index.centroids))
-      .withColumn("qcdot", dot(col("qn"), col("centroid")))
-      .withColumn("cdist", col("qcdot") * 2 - col("cnorm2"))
-      .withColumn("prk", row_number().over(probeW))
-      .filter(col("prk") <= nprobe)
-      .select("query_id", "query_vec", "qtable", "list_id", "qcdot")
+    GraftFunctions.register(queries.sparkSession)
+    val batch = collectBatch(queries, idCol, vecCol)
+    val pairs = ivfPqCandidates(index, batch, nprobe, refine)
+      .fold(Array.empty[(Int, Any)])(_.collect().map(r => (r.getInt(0), r.get(1))))
+    refineTopK(batch, pairs, corpus, idCol, vecCol, k)
+  }
 
-    // Only (query_id, neighbor_id, approx) rides the top-refine exchange —
-    // the query vector re-attaches AFTER the cut from the broadcastable
-    // query set (carrying it per candidate would ship dim floats ×
-    // candidates through the shuffle for nothing).
-    val approxW = Window.partitionBy(col("query_id"))
+  /** The candidate plan [[searchIvfPq]] runs for `queries` (None when no
+    * list is probed): per query, the top `refine` (qidx, neighbor_id) by
+    * approx desc, then id, where qidx indexes the collected batch.
+    */
+  private[graft] def ivfPqCandidatePlan(index: IvfPqIndex, queries: DataFrame,
+      idCol: String, vecCol: String, nprobe: Int = 4,
+      refine: Int = 32): Option[DataFrame] = {
+    GraftFunctions.register(queries.sparkSession)
+    ivfPqCandidates(index, collectBatch(queries, idCol, vecCol), nprobe, refine)
+  }
+
+  private def ivfPqCandidates(index: IvfPqIndex, batch: QueryBatch,
+      nprobe: Int, refine: Int): Option[DataFrame] = {
+    // Invert the routing to per-list probe lists (CSR by list id).
+    val byList = Array.fill(index.centroids.length)(
+      scala.collection.mutable.ArrayBuffer.empty[(Int, Double)])
+    batch.normed.indices.foreach { q =>
+      rankLists(batch.normed(q), index.centroids, nprobe)
+        .foreach { case (list, qcdot) => byList(list) += ((q, qcdot)) }
+    }
+    val probed = byList.indices.filter(byList(_).nonEmpty)
+    if (probed.isEmpty) return None
+    val books = index.codebooks.flatten.flatten
+    val m = index.codebooks.length
+    val ks = if (m == 0) 0 else index.codebooks(0).length
+    val tables = batch.data.map { v =>
+      (if (batch.isFloat) Kernels.pqAdcTableF(v, books, m, ks)
+       else Kernels.pqAdcTableD(v, books, m, ks)).toDoubleArray()
+    }
+    val scores = GraftFunctions.pqProbeScores(col("list_id"), col("codes"),
+      byList.scanLeft(0)(_ + _.size), byList.flatMap(_.map(_._1)),
+      byList.flatMap(_.map(_._2)), tables)
+    val queryId = element_at(array(batch.ids.toIndexedSeq.map(lit): _*),
+      col("qidx") + 1)
+    val approxW = Window.partitionBy(col("qidx"))
       .orderBy(col("approx").desc, col("neighbor_id"))
-    val cand = index.encoded.join(broadcast(probes.drop("query_vec")), Seq("list_id"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (col("qcdot") + GraftFunctions.pqAdcScore(col("codes"), col("qtable")))
-          .as("approx"))
+    Some(index.encoded
+      .filter(col("list_id").isin(probed: _*))
+      .select(col("neighbor_id"), explode(scores).as("p"))
+      .select(col("p.qidx").as("qidx"), col("neighbor_id"),
+        col("p.approx").as("approx"))
+      .filter(col("neighbor_id") =!= queryId)
       .withColumn("ark", row_number().over(approxW))
       .filter(col("ark") <= refine)
-      .select("query_id", "neighbor_id")
-      .join(queries.select(col(idCol).as("query_id"), col(vecCol).as("query_vec")),
-        Seq("query_id"))
+      .select("qidx", "neighbor_id"))
+  }
 
+  /** Exact re-rank of collected (qidx, neighbor_id) candidates: one scan of
+    * `corpus` for the candidate ids, cosine by the `graft_cosine` kernels,
+    * top k per query by (cosine desc, id asc) in Spark's orderings, as a
+    * local DataFrame. A corpus id held by several rows scores each row, as
+    * a join on the id would.
+    */
+  private def refineTopK(batch: QueryBatch, pairs: Array[(Int, Any)],
+      corpus: DataFrame, idCol: String, vecCol: String, k: Int): DataFrame = {
     val cvec = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val scored = cvec.join(broadcast(cand), Seq("neighbor_id"))
-      .withColumn("cosine",
-        GraftFunctions.cosineSim(col("query_vec"), col("c_vec")))
-    topK(scored, k)
+    val Array(idField, vecField) = cvec.schema.fields
+    val isFloat = isFloatVector(vecField)
+    require(isFloat == batch.isFloat,
+      s"cosine needs two array<float> or two array<double> vectors, got " +
+        s"${batch.vecField.dataType.sql} and ${vecField.dataType.sql}")
+    val ids = pairs.map(_._2).distinct
+    val vecsById: Map[Any, Array[ArrayData]] =
+      if (ids.isEmpty) Map.empty
+      else cvec.filter(col("neighbor_id").isin(ids.toIndexedSeq: _*)).collect()
+        .groupBy(_.get(0)).map { case (id, rs) =>
+          id -> rs.map(r =>
+            if (r.isNullAt(1)) null else arrayData(r.getSeq[Any](1), isFloat))
+        }
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idField.dataType)
+    val idAsc = TypeUtils.getInterpretedOrdering(idField.dataType)
+    // (neighbor id, its catalyst value, cosine or null)
+    val byRank: Ordering[(Any, Any, java.lang.Double)] = (a, b) =>
+      (a._3, b._3) match {
+        case (null, null) => idAsc.compare(a._2, b._2)
+        case (null, _)    => 1
+        case (_, null)    => -1
+        case (x, y) =>
+          val c = SQLOrderingUtil.compareDoubles(y, x)
+          if (c != 0) c else idAsc.compare(a._2, b._2)
+      }
+    val cosine: (ArrayData, ArrayData) => Double =
+      if (isFloat) Kernels.cosine else Kernels.cosineD
+    val rows = pairs.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (q, cands) =>
+      cands.toSeq
+        .flatMap { case (_, nid) =>
+          val cat = toCatalyst(nid)
+          vecsById.getOrElse(nid, Array.empty[ArrayData]).map { v =>
+            (nid, cat,
+              if (v == null) null else java.lang.Double.valueOf(cosine(batch.data(q), v)))
+          }
+        }
+        .sorted(byRank).take(k).zipWithIndex
+        .map { case ((nid, _, cos), r) => Row(batch.ids(q), nid, cos, r + 1) }
+    }
+    corpus.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+      batch.idField.copy(name = "query_id"),
+      idField,
+      StructField("cosine", DoubleType),
+      StructField("rank", IntegerType, nullable = false))))
   }
 
   // ------------------------------------------------------------ persistence
   // An index is built once per corpus version and searched for months; at
   // 100 TB the encoded/assigned corpus must live in tables, not an
   // in-memory frame. The corpus-sized half is written PARTITIONED BY
-  // list_id, so a later search's candidate join dynamic-partition-prunes
-  // the scan to the probed lists (nprobe/nlist of the index — the I/O
-  // analog of FAISS only walking probed inverted lists; spec-asserted).
+  // list_id, so a later search's static `list_id IN (probed lists)` filter
+  // prunes the scan to the probed lists (nprobe/nlist of the index at most
+  // per query — the I/O analog of FAISS only walking probed inverted
+  // lists; spec-asserted). The centroid table is collected back on load.
 
   /** Persist a built IVF-Flat index as `<prefix>_centroids` +
     * `<prefix>_assigned` (partitioned by list id).
     */
   def saveIvf(index: IvfIndex, prefix: String): Unit = {
-    index.centroids.write.mode("overwrite").saveAsTable(s"${prefix}_centroids")
+    saveCentroids(index.assigned.sparkSession, index.centroids, prefix)
     index.assigned.write.mode("overwrite").partitionBy("list_id")
       .saveAsTable(s"${prefix}_assigned")
   }
 
   /** Reattach a persisted IVF-Flat index. */
   def loadIvf(spark: SparkSession, prefix: String): IvfIndex = {
-    val cents = spark.table(s"${prefix}_centroids")
+    val cents = loadCentroids(spark, prefix)
     IvfIndex(cents,
       spark.table(s"${prefix}_assigned")
         .select("neighbor_id", "neighbor_vec", "list_id"),
-      cents.count().toInt)
+      cents.length)
   }
 
   /** Persist a built IVF-PQ index as `<prefix>_centroids`,
@@ -570,9 +700,9 @@ object Knn {
     * metadata-scale) and `<prefix>_encoded` (partitioned by list id).
     */
   def saveIvfPq(index: IvfPqIndex, prefix: String): Unit = {
-    val spark = index.centroids.sparkSession
+    val spark = index.encoded.sparkSession
     import spark.implicits._
-    index.centroids.write.mode("overwrite").saveAsTable(s"${prefix}_centroids")
+    saveCentroids(spark, index.centroids, prefix)
     index.codebooks.zipWithIndex.flatMap { case (sub, s) =>
       sub.zipWithIndex.map { case (w, j) => (s, j, w.toSeq) }
     }.toSeq.toDF("sub", "code", "codeword")
@@ -581,11 +711,12 @@ object Knn {
       .saveAsTable(s"${prefix}_encoded")
   }
 
-  /** Reattach a persisted IVF-PQ index (codebooks collect driver-side —
-    * m·ks rows, the same bounded footprint training had).
+  /** Reattach a persisted IVF-PQ index (centroids and codebooks collect
+    * driver-side — nlist + m·ks rows, the same bounded footprint training
+    * had).
     */
   def loadIvfPq(spark: SparkSession, prefix: String): IvfPqIndex = {
-    val cents = spark.table(s"${prefix}_centroids")
+    val cents = loadCentroids(spark, prefix)
     val bookRows = spark.table(s"${prefix}_codebooks").collect()
       .map(r => (r.getInt(0), r.getInt(1),
         r.getSeq[Number](2).map(_.doubleValue).toArray))
@@ -596,18 +727,28 @@ object Knn {
       }
     IvfPqIndex(cents, codebooks,
       spark.table(s"${prefix}_encoded").select("neighbor_id", "list_id", "codes"),
-      cents.count().toInt, codebooks.length)
+      cents.length, codebooks.length)
   }
 
-  // Euclidean k-means on the unit sphere ≈ cosine geometry. The norm is
-  // materialized once per row (a lambda-inlined norm would recompute the
-  // O(d) aggregate per ELEMENT — O(d²) per row).
-  private def l2norm(c: Column): Column =
-    sqrt(aggregate(c, lit(0.0d), (acc, x) => acc + x.cast("double") * x))
-  private def withNormed(df: DataFrame, vec: String): DataFrame =
-    df.withColumn("__l2", l2norm(col(vec)))
-      .withColumn("nvec", transform(col(vec), x => x.cast("double") / col("__l2")))
-      .drop("__l2")
+  /** `<prefix>_centroids` as (list_id, centroid, cnorm2). */
+  private def saveCentroids(spark: SparkSession, cents: Array[Array[Double]],
+      prefix: String): Unit = {
+    import spark.implicits._
+    cents.zipWithIndex
+      .map { case (c, i) => (i, c.toSeq, c.map(x => x * x).sum) }.toSeq
+      .toDF("list_id", "centroid", "cnorm2")
+      .write.mode("overwrite").saveAsTable(s"${prefix}_centroids")
+  }
+
+  private def loadCentroids(spark: SparkSession,
+      prefix: String): Array[Array[Double]] = {
+    val rows = spark.table(s"${prefix}_centroids").select("list_id", "centroid")
+      .collect().map(r => (r.getInt(0), r.getSeq[Number](1).map(_.doubleValue).toArray))
+      .sortBy(_._1)
+    require(rows.map(_._1).sameElements(rows.indices),
+      s"${prefix}_centroids: list ids must be 0..${rows.length - 1}")
+    rows.map(_._2)
+  }
 
   /** Deterministic, layout-independent bounded sample: the first `n` rows
     * in (xxhash64(seed, id), id) order — membership is a pure function of

@@ -149,19 +149,32 @@ object PlanAudit {
         l.contains("Scan")).mkString("\n"))
 
     // IVF-PQ: corpus encoding must be scan-local codegen (assign + encode
-    // in one project, zero Exchange); the search side's only corpus-wide
-    // exchange is the top-refine window — codes and vectors stay out of it.
+    // in one project, zero Exchange). The search routes on the driver, so
+    // its candidate plan over a persisted index must read only the probed
+    // lists through a STATIC list_id partition filter, carry exactly one
+    // Exchange (the top-refine window — ids and approx only, codes and
+    // vectors stay out of it) and broadcast nothing.
     println("=== buildIvfPq encoding (want scan-local codegen, zero Exchange) ===")
     val pqx = graft.similarity.Knn.buildIvfPq(vecs, "vec_id", "embedding")
     val encPlan = pqx.encoded.queryExecution.executedPlan.toString
     val encExchanges = encPlan.linesIterator.count(_.contains("Exchange"))
     val encCodegen = encPlan.linesIterator.count(_.trim.startsWith("*("))
     println(s"exchanges: $encExchanges (want 0), codegen spans: $encCodegen (want >0)")
-    println("=== searchIvfPq (want ids+approx only in the refine exchange) ===")
-    val pqTop = graft.similarity.Knn.searchIvfPq(pqx, probes, vecs,
-      "vec_id", "embedding", k = 3)
-    println(pqTop.queryExecution.executedPlan.toString.linesIterator
-      .filter(l => l.contains("Exchange") || l.contains("Broadcast"))
+    println("=== searchIvfPq candidates (want static list_id PartitionFilters, " +
+      "1 Exchange, 0 BroadcastExchange) ===")
+    graft.similarity.Knn.saveIvfPq(pqx, s"$db.ivfpq")
+    val candPlan = graft.similarity.Knn.ivfPqCandidatePlan(
+      graft.similarity.Knn.loadIvfPq(spark, s"$db.ivfpq"), probes,
+      "vec_id", "embedding").get.queryExecution.executedPlan.toString
+    val candLines = candPlan.linesIterator.toSeq
+    val staticPruned = candLines.exists(l => l.contains("Scan") &&
+      l.split("PartitionFilters: ").lift(1)
+        .exists(_.takeWhile(_ != ']').contains("list_id")))
+    val candBroadcasts = candLines.count(_.contains("BroadcastExchange"))
+    val candExchanges = candLines.count(_.contains("Exchange")) - candBroadcasts
+    println(s"static list_id partition filter: $staticPruned (want true), " +
+      s"exchanges: $candExchanges (want 1), broadcasts: $candBroadcasts (want 0)")
+    println(candLines.filter(l => l.contains("Exchange") || l.contains("Scan"))
       .mkString("\n"))
 
     // Bloom cross-corpus dedup: the clean branch must be a scan-local

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -164,12 +166,26 @@ class PipelineSpec extends AnyFunSuite {
       .select("query_id", "neighbor_id", "rank")
     assert(disk.except(mem).count() === 0)
     assert(mem.except(disk).count() === 0)
-    // The candidate join over the list_id-partitioned table must
-    // dynamic-partition-prune the scan to the probed lists — the I/O analog
-    // of only walking probed inverted lists.
-    val plan = disk.queryExecution.executedPlan.toString
-    assert(plan.toLowerCase.contains("dynamicpruning"),
-      s"no dynamic partition pruning on the encoded scan:\n$plan")
+    // The candidate scan over the list_id-partitioned table must read
+    // exactly the probed lists — the I/O analog of only walking probed
+    // inverted lists. The probed set comes from the window formulation
+    // (the reference below), so the pruning is checked against routing
+    // computed independently of the driver-side code under test.
+    val few = probes.filter(col("vec_id") < 5000002L)
+    val cand = Knn.ivfPqCandidatePlan(pqLoaded, few, "vec_id", "embedding",
+      nprobe = 2).get
+    val scans = cand.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+    assert(scans.length === 1)
+    assert(scans.head.partitionFilters.nonEmpty,
+      s"no static partition filter on the encoded scan:\n${cand.queryExecution.sparkPlan}")
+    val selected = scans.head.selectedPartitions.filePartitionIterator
+      .map(_.values.getInt(0)).toSet
+    val probed = windowProbes(pqLoaded, few, "vec_id", "embedding", 2)
+      .select("list_id").distinct().collect().map(_.getInt(0)).toSet
+    assert(selected === probed)
+    assert(probed.size < pqLoaded.nlist, s"probed $probed of ${pqLoaded.nlist} lists")
     // IVF-Flat round-trip through the same persistence contract.
     val flat = Knn.buildIvf(vecs, "vec_id", "embedding", nlist = 8)
     Knn.saveIvf(flat, "default.ivf_spec")
@@ -199,6 +215,188 @@ class PipelineSpec extends AnyFunSuite {
       .select("query_id", "neighbor_id", "rank")
     assert(pq.except(exact).count() === 0)
     assert(exact.except(pq).count() === 0)
+  }
+
+  /** Probe ranking of the window formulation IVF search used before
+    * driver routing: normalized queries × the broadcast centroid table,
+    * cdist = 2·q̂·c − ‖c‖², top `nprobe` per query by (cdist desc, list_id).
+    */
+  private def windowProbes(index: Knn.IvfPqIndex, queries: DataFrame,
+      idCol: String, vecCol: String, nprobe: Int): DataFrame = {
+    import spark.implicits._
+    val cents = index.centroids.zipWithIndex
+      .map { case (c, i) => (i, c.toSeq, c.map(x => x * x).sum) }.toSeq
+      .toDF("list_id", "centroid", "cnorm2")
+    val probeW = Window.partitionBy(col("query_id"))
+      .orderBy(col("cdist").desc, col("list_id"))
+    queries.select(col(idCol).as("query_id"), col(vecCol).as("query_vec"))
+      .withColumn("__l2", sqrt(aggregate(col("query_vec"), lit(0.0d),
+        (acc, x) => acc + x.cast("double") * x)))
+      .withColumn("qn", transform(col("query_vec"),
+        x => x.cast("double") / col("__l2")))
+      .drop("__l2")
+      .withColumn("qtable",
+        GraftFunctions.pqAdcTable(col("query_vec"), index.codebooks))
+      .crossJoin(broadcast(cents))
+      .withColumn("qcdot", aggregate(zip_with(col("qn"), col("centroid"),
+        (x, y) => x * y), lit(0.0d), (acc, x) => acc + x))
+      .withColumn("cdist", col("qcdot") * 2 - col("cnorm2"))
+      .withColumn("prk", row_number().over(probeW))
+      .filter(col("prk") <= nprobe)
+      .select("query_id", "query_vec", "qtable", "list_id", "qcdot")
+  }
+
+  /** The window formulation of IVF-PQ search, kept as the reference the
+    * driver-routed [[Knn.searchIvfPq]] must equal row for row: probe
+    * window, ADC join against the broadcast probes, top-refine window,
+    * broadcast refine join, top-k window.
+    */
+  private def windowIvfPq(index: Knn.IvfPqIndex, queries: DataFrame,
+      corpus: DataFrame, idCol: String, vecCol: String, k: Int, nprobe: Int,
+      refine: Int): DataFrame = {
+    val probes = windowProbes(index, queries, idCol, vecCol, nprobe)
+    val approxW = Window.partitionBy(col("query_id"))
+      .orderBy(col("approx").desc, col("neighbor_id"))
+    val cand = index.encoded.join(broadcast(probes.drop("query_vec")), Seq("list_id"))
+      .filter(col("neighbor_id") =!= col("query_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        (col("qcdot") + GraftFunctions.pqAdcScore(col("codes"), col("qtable")))
+          .as("approx"))
+      .withColumn("ark", row_number().over(approxW))
+      .filter(col("ark") <= refine)
+      .select("query_id", "neighbor_id")
+      .join(queries.select(col(idCol).as("query_id"), col(vecCol).as("query_vec")),
+        Seq("query_id"))
+    val topW = Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("neighbor_id"))
+    corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
+      .join(broadcast(cand), Seq("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        GraftFunctions.cosineSim(col("query_vec"), col("c_vec")).as("cosine"))
+      .withColumn("rank", row_number().over(topW))
+      .filter(col("rank") <= k)
+  }
+
+  /** Same rows, duplicates counted, values compared exactly. */
+  private def assertSameRows(got: DataFrame, want: DataFrame, what: String): Unit = {
+    val cols = Seq("query_id", "neighbor_id", "cosine", "rank").map(col)
+    val (g, w) = (got.select(cols: _*), want.select(cols: _*))
+    assert(g.count() === w.count(), what)
+    assert(g.exceptAll(w).count() === 0, what)
+    assert(w.exceptAll(g).count() === 0, what)
+  }
+
+  test("IVF-PQ driver routing equals the window formulation row for row, ties included") {
+    import spark.implicits._
+    // Four unit-axis centroids of equal norm, so routing and assignment
+    // ties are exact: query 900 and corpus row 6 sit exactly between
+    // lists 0 and 1 (both must go to list 0). Rows 1-3, 4-5 and 10-11 are
+    // duplicated vectors: equal codes, equal approx, equal cosine, so every
+    // cut below falls inside a tie that only the id order breaks.
+    val cents = Array(Array(1.0, 0.0, 0.0, 0.0), Array(0.0, 1.0, 0.0, 0.0),
+      Array(0.0, 0.0, 1.0, 0.0), Array(0.0, 0.0, 0.0, 1.0))
+    val books = Array.fill(2)(Array(Array(0.0, 0.0), Array(-0.5, 0.25),
+      Array(0.25, -0.5), Array(-0.25, -0.25)))
+    def v(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
+    val corpus = (Seq(1L, 2L, 3L).map(_ -> v(0.9, 0.3, 0.1, 0.0)) ++
+      Seq(4L, 5L).map(_ -> v(0.3, 0.9, 0.1, 0.0)) ++
+      Seq(6L -> v(0.7, 0.7, 0.1, 0.0), 7L -> v(0.1, 0.1, 0.9, 0.2),
+        8L -> v(0.1, 0.2, 0.9, 0.1), 9L -> v(0.0, 0.2, 0.1, 0.9)) ++
+      Seq(10L, 11L).map(_ -> v(0.8, 0.5, 0.0, 0.1)))
+      .toDF("id", "vec")
+    val queries = Seq(900L -> v(1.0, 1.0, 0.2, 0.0), 6L -> v(0.7, 0.7, 0.1, 0.0),
+      901L -> v(0.3, 0.9, 0.1, 0.0), 902L -> v(0.1, 0.15, 0.9, 0.15))
+      .toDF("id", "vec")
+    val encoded = corpus.select(col("id").as("neighbor_id"), col("vec").as("neighbor_vec"))
+      .withColumn("list_id", GraftFunctions.nearestCentroid(col("neighbor_vec"), cents))
+      .withColumn("codes", GraftFunctions.pqEncode(col("neighbor_vec"),
+        col("list_id"), cents, books))
+      .select("neighbor_id", "list_id", "codes")
+    assert(encoded.filter(col("neighbor_id") === 6L).select("list_id").as[Int].head() === 0)
+    val index = Knn.IvfPqIndex(cents, books, encoded, nlist = 4, m = 2)
+    for {
+      nprobe <- Seq(1, 2); refine <- Seq(1, 2, 3, 5); k <- Seq(1, 2) if k <= refine
+    } {
+      val what = s"nprobe=$nprobe refine=$refine k=$k"
+      val got = Knn.searchIvfPq(index, queries, corpus, "id", "vec", k, nprobe, refine)
+      assertSameRows(got, windowIvfPq(index, queries, corpus, "id", "vec", k, nprobe,
+        refine), what)
+      // The self id never comes back, and the equidistant query probes
+      // list 0 alone at nprobe = 1 (rows 1-3, 6, 10-11).
+      assert(got.filter(col("query_id") === col("neighbor_id")).count() === 0, what)
+      if (nprobe == 1)
+        assert(got.filter(col("query_id") === 900L).select("neighbor_id").as[Long]
+          .collect().toSet.subsetOf(Set(1L, 2L, 3L, 6L, 10L, 11L)), what)
+    }
+    // The same equality on the embeddings corpus, at the default budget.
+    val pq = Knn.buildIvfPq(vecs, "vec_id", "embedding", nlist = 8, m = 8)
+    val probes = vecs.filter(col("vec_id") < 16)
+      .withColumn("vec_id", col("vec_id") + 5000000L)
+    assertSameRows(Knn.searchIvfPq(pq, probes, vecs, "vec_id", "embedding", k = 3),
+      windowIvfPq(pq, probes, vecs, "vec_id", "embedding", 3, 4, 32), "embeddings")
+  }
+
+  test("IVF-PQ search of a local 16-query batch starts at most 3 Spark jobs") {
+    val corpus = vecs // each `vecs` reads the table anew: bind it outside the count
+    val pq = Knn.buildIvfPq(corpus, "vec_id", "embedding", nlist = 8, m = 8)
+    val probes = corpus.filter(col("vec_id") < 16)
+      .withColumn("vec_id", col("vec_id") + 5000000L)
+    val local = spark.createDataFrame(
+      java.util.Arrays.asList(probes.collect(): _*), probes.schema)
+    val group = s"ivfpq-jobs-${java.util.UUID.randomUUID()}"
+    spark.sparkContext.setJobGroup(group, group)
+    val res = try Knn.searchIvfPq(pq, local, corpus, "vec_id", "embedding", k = 3)
+      finally spark.sparkContext.clearJobGroup()
+    // The status store is fed asynchronously: poll until the count is stable.
+    var prev = -1
+    var jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+    val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
+    while (jobs != prev && System.nanoTime() < deadline) {
+      prev = jobs; Thread.sleep(200)
+      jobs = spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+    }
+    assert(jobs > 0 && jobs <= 3, s"$jobs Spark jobs for one 16-query batch")
+    assert(res.count() === 16 * 3)
+  }
+
+  test("GraftFunctions.register is a no-op on repeat calls") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val session = spark.newSession()
+    val reg = session.sessionState.functionRegistry
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry")
+      .asInstanceOf[CoreLogger]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val spy = new AbstractAppender("register-spy", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage)
+    }
+    spy.start()
+    logger.addAppender(spy)
+    try {
+      GraftFunctions.register(session)
+      val names = reg.listFunction().map(_.funcName).filter(_.startsWith("graft_"))
+      assert(names.size === 24)
+      assert(seen.isEmpty, seen)
+      val infos = names.map(n => n -> reg.lookupFunction(FunctionIdentifier(n)).get)
+      GraftFunctions.register(session)
+      assert(seen.isEmpty, seen)
+      infos.foreach { case (n, info) =>
+        assert(reg.lookupFunction(FunctionIdentifier(n)).get eq info, n)
+      }
+      // The spy does see a replacement when one happens.
+      reg.createOrReplaceTempFunction("graft_nfc",
+        es => graft.functions.NfcNormalize(es.head), "built-in")
+      assert(seen.size === 1, seen)
+    } finally {
+      logger.removeAppender(spy)
+      spy.stop()
+    }
   }
 
   test("LSH bucket cap bounds candidate pairs for a pathological hot bucket") {

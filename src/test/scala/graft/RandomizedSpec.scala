@@ -4172,11 +4172,8 @@ class RandomizedSpec extends AnyFunSuite {
       val nl = 3 + rnd.nextInt(6)
       val idx = Knn.buildIvf(corpus, "id", "vec", nlist = nl,
         seed = 100L + trial, maxIter = 2 + rnd.nextInt(3))
-      val cents = idx.centroids
-        .select("list_id", "centroid", "cnorm2").collect()
-        .map(r => (r.getInt(0),
-          r.getSeq[Double](1).toArray, r.getDouble(2)))
-        .sortBy(_._1)
+      val cents = idx.centroids.zipWithIndex
+        .map { case (c, i) => (i, c, c.map(x => x * x).sum) }
       val got = idx.assigned.select("neighbor_id", "list_id").collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
       // Reference replays the kernel: score = 2·(v·c)/‖v‖ − ‖c‖², first
